@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 
-def cut_lineage(df: DataFrame, eager_stats: bool = False) -> DataFrame:
+def cut_lineage(df: DataFrame) -> DataFrame:
     """Truncate lineage for superstep loops: persist → localCheckpoint
     (the checkpoint job doubles as the cache-filling action and fires
     any attached Observation) → unpersist the staging cache.
@@ -43,22 +43,8 @@ def cut_lineage(df: DataFrame, eager_stats: bool = False) -> DataFrame:
     an UNPERSISTED plan leaves a state whose every reuse re-executes
     its input plan, so chained supersteps go exponential (~0.4 s/step
     flat with this pattern vs 35 s by step 21 without it).
-
-    ``eager_stats``: materialize the staging cache (one cache-scan
-    action, which also fires any attached Observation) BEFORE the
-    localCheckpoint, so the checkpoint's LogicalRDD records the
-    cache's REAL statistics instead of the unmaterialized plan's
-    size-product estimate.  Join estimates multiply children sizes, so
-    a superstep state checkpointed without this carries a size estimate
-    that compounds exponentially across supersteps — and
-    EnsureRequirements then re-shuffles every SinglePartition join
-    input whose estimate exceeds spark.sql.maxSinglePartitionBytes
-    (see session.no_adaptive).  Used by the fused single-partition
-    loops; costs one extra tiny job per cut.
     """
     staged = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager_stats:
-        staged.count()
     out = staged.localCheckpoint(eager=True)
     staged.unpersist()
     return out
@@ -100,7 +86,6 @@ class SuperstepLedger:
         force_checkpoint: bool = False,
         observation=None,
         metrics_only: bool = False,
-        eager_stats: bool = False,
     ) -> DataFrame | None:
         """Log one superstep; persist state every ``every`` steps.
 
@@ -112,7 +97,7 @@ class SuperstepLedger:
 
         ``observation``: a ``pyspark.sql.Observation`` attached to the
         ``state`` plan.  The materialization performed here doubles as
-        the metrics action (one Spark job per superstep instead of two);
+        the metrics action (no separate metrics job per superstep);
         missing ``metric`` / ``n_active`` are filled from the
         observation's ``metric`` / ``n_active`` keys after the run.
 
@@ -140,7 +125,7 @@ class SuperstepLedger:
         elif metrics_only:
             out = state
         else:
-            out = cut_lineage(state, eager_stats=eager_stats)
+            out = cut_lineage(state)
         if observation is not None:
             got = observation.get
             if metric is None:

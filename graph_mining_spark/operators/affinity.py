@@ -394,15 +394,10 @@ def affinity_cluster(
 
     from graph_mining_spark.session import no_adaptive
 
-    # fused single-partition sub-regime (see forest_components): the
-    # pointer-forest connectivity runs its integer-only doubling rounds
-    # as one in-stage shuffled-hash-join job each — no broadcast-build
-    # sub-jobs.  Gated on the edge table fitting one ~64 MB partition.
-    fused = bool(small) and m <= 4_000_000
     small_parts = max(1, -(-m // 4_000_000))
     with no_adaptive(edges.sparkSession, small_parts) if small else contextlib.nullcontext():
         return _affinity_rounds(
-            cfg, cur_edges, nw, labels, user_scoped, small, fused, ledger, return_levels
+            cfg, cur_edges, nw, labels, user_scoped, small, ledger, return_levels
         )
 
 
@@ -419,7 +414,6 @@ def _affinity_rounds(
     labels: DataFrame,
     user_scoped: bool,
     small: bool,
-    fused: bool,
     ledger: SuperstepLedger | None,
     return_levels: bool,
 ) -> DataFrame | list[DataFrame]:
@@ -457,7 +451,6 @@ def _affinity_rounds(
             cur_verts,
             targets_in_vertices=(i > 0 or not user_scoped),
             small=small,
-            fused=fused,
         )
         if cfg.size_constraint is not None:
             from graph_mining_spark.operators.size_constraint import enforce_max_cluster_size

@@ -109,26 +109,8 @@ def connected_components(
 
     from graph_mining_spark.session import no_adaptive
 
-    # fused single-partition regime (same trick as pagerank's): when the
-    # edge table fits ONE size-derived partition and the vertex set one
-    # ~64 MB partition, stack coalesce(1) on the repartitions so every
-    # per-superstep join runs as an in-stage shuffled-hash join — zero
-    # exchanges, zero broadcast-build sub-jobs, ONE Spark job per
-    # superstep (labels are exact integers, so results are unchanged by
-    # construction).  At scale eparts > 1 and the gate never fires.
-    fused = bool(small) and m <= 4_000_000
-
     with no_adaptive(spark, max(1, -(-m // 4_000_000))) if small else contextlib.nullcontext():
-        if fused:
-            # a PURE coalesce(1): narrow (the cache fill never shuffles)
-            # and its SinglePartition output satisfies every join /
-            # aggregation distribution.  Stacking it on a repartition
-            # would NOT work — CollapseRepartition folds the pair into
-            # the hash exchange, whose HashPartitioning(dst, 1) fails
-            # the src-keyed join requirement and re-introduces tiny
-            # in-plan exchanges.
-            e = raw.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
-        elif small:
+        if small:
             eparts = max(1, -(-m // 4_000_000))
             # materialized lazily by superstep 1 (reads the cached raw)
             e = raw.repartition(eparts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
@@ -150,9 +132,7 @@ def connected_components(
         else:
             start = 0
             labels = verts.select("vid", F.col("vid").alias("label"))
-            if fused:
-                labels = labels.coalesce(1)
-            elif small:
+            if small:
                 labels = labels.repartition(max(1, -(-2 * m // 2_000_000)), "vid")
             labels = cut_lineage(labels)
             changed = labels
@@ -173,40 +153,22 @@ def connected_components(
                 nbr_min = e.groupBy(F.col("dst").alias("vid")).agg(F.min("src").alias("nbr_label"))
             else:
                 frontier = changed.withColumnRenamed("vid", "src")
-                if fused:
-                    frontier = frontier.hint("shuffle_hash")
-                elif small or (n_changed is not None and n_changed <= broadcast_threshold):
+                if small or (n_changed is not None and n_changed <= broadcast_threshold):
                     frontier = F.broadcast(frontier)
                 nbr_min = (
                     e.join(frontier, "src")
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.min("label").alias("nbr_label"))
                 )
-            if fused:
-                # the extra coalesce(1) re-stamps a clean SinglePartition
-                # on the join-derived aggregate: a join output reports a
-                # PartitioningCollection, which fails EnsureRequirements'
-                # co-partition compatibility check at the NEXT join and
-                # would re-shuffle BOTH sides (measured: hashpartitioning
-                # (vid, 1) exchanges on either side of every superstep
-                # join without it)
-                nbr_min = nbr_min.coalesce(1).hint("shuffle_hash")
-            elif small:
+            if small:
                 nbr_min = F.broadcast(nbr_min)
             stepped = (
                 labels.join(nbr_min, "vid", "left")
                 .select("vid", F.least("label", F.coalesce("nbr_label", "label")).alias("label"), F.col("label").alias("_prev"))
             )
-            if fused:
-                # SinglePartition metadata for the label-keyed self-join
-                # below (the join output's hash(vid, 1) partitioning
-                # would not satisfy a `label` clustering)
-                stepped = stepped.coalesce(1)
             # (2) pointer jumping: label ← label[label]
             parent = stepped.select(F.col("vid").alias("_p_vid"), F.col("label").alias("_p_label"))
-            if fused:
-                parent = parent.hint("shuffle_hash")
-            elif small:
+            if small:
                 parent = F.broadcast(parent)
             jumped = (
                 stepped.join(parent, stepped.label == parent._p_vid, "left")
@@ -217,40 +179,22 @@ def connected_components(
                 )
             )
             # convergence metric rides the checkpoint materialization
-            # (Observation), so each superstep is ONE Spark job
+            # (Observation) instead of a separate count action
             obs = Observation(f"cc_{step}")
             staged = jumped.select(
                 "vid", "label", (F.col("label") != F.col("_prev")).alias("_chg")
             )
-            if fused:
-                # coalesce BEFORE the lineage cut: a join output reports
-                # a PartitioningCollection, and a LogicalRDD checkpointed
-                # with one poisons every later join against it (measured:
-                # EnsureRequirements re-shuffles both sides even through
-                # a downstream coalesce).  With the coalesce below the
-                # checkpoint, the LogicalRDD records clean SinglePartition
-                staged = staged.coalesce(1)
             staged = staged.observe(
                 obs,
                 F.sum(F.col("_chg").cast("long")).alias("metric"),
                 F.sum(F.col("_chg").cast("long")).alias("n_active"),
             )
-            # fused: eager_stats records the REAL cache statistics in
-            # the checkpointed state — the unmaterialized plan's
-            # join-product size estimate compounds across supersteps
-            # and would push every later superstep's join inputs past
-            # spark.sql.maxSinglePartitionBytes, re-introducing the
-            # per-superstep exchanges (see cut_lineage)
             if ledger is not None:
-                state = ledger.record(step, staged, observation=obs, eager_stats=fused)
+                state = ledger.record(step, staged, observation=obs)
                 n_changed = int(ledger.records[-1]["metric"])
             else:
-                state = cut_lineage(staged, eager_stats=fused)
+                state = cut_lineage(staged)
                 n_changed = int(obs.get["metric"] or 0)
-            if fused:
-                # restore SinglePartition metadata on the checkpointed
-                # state so the next superstep stays exchange-free
-                state = state.coalesce(1)
             changed = state.filter("_chg").select("vid", "label")
             labels = state.select("vid", "label")
             if n_changed == 0:
@@ -267,7 +211,6 @@ def forest_components(
     max_doublings: int = 64,
     targets_in_vertices: bool = False,
     small: bool = False,
-    fused: bool = False,
 ) -> DataFrame:
     """Components of a BEST-NEIGHBOR pointer forest — the affinity
     round's inner connectivity (parallel_affinity_internal.cc's forest
@@ -298,32 +241,17 @@ def forest_components(
     from pyspark.sql import Observation
 
     def _b(df):
-        # ``fused`` (affinity's fused single-partition regime): every
-        # table here is a SinglePartition pointer/label table, so an
-        # in-stage shuffled-hash join needs NO broadcast-build sub-job
-        # — each doubling round is ONE Spark job with zero exchanges.
-        # ``small`` alone: the vertex/cluster-sized build sides fit a
-        # broadcast, which keeps each doubling round a single narrow
-        # job instead of a two-sided shuffle.  All columns are exact
-        # integers, so results are identical in every mode.
-        if fused:
-            return df.hint("shuffle_hash")
+        # ``small``: the vertex/cluster-sized build sides fit a
+        # broadcast, so each doubling round joins without a two-sided
+        # shuffle.  All columns are exact integers, so results are
+        # identical in either mode.
         return F.broadcast(df) if small else df
-
-    def _c(df):
-        # SinglePartition re-stamp on join outputs (their
-        # PartitioningCollection fails EnsureRequirements' co-partition
-        # compatibility check at the next join / lineage cut)
-        return df.coalesce(1) if fused else df
 
     p0 = best.select(F.col("src").alias("vid"), F.col("dst").alias("p"))
     verts = vertices.select(F.col("vid").cast("long"))
-    if fused:
-        p0 = p0.coalesce(1)
-        verts = verts.coalesce(1)
-    p = _c(verts.join(_b(p0), "vid", "left").select(
+    p = verts.join(_b(p0), "vid", "left").select(
         "vid", F.coalesce("p", F.col("vid")).alias("p")
-    ))
+    )
     # clamp pointers whose target is OUTSIDE the vertex table to self —
     # connected_components(vertices=...) ignores edges through unknown
     # endpoints (they never enter the label table), and the doubling
@@ -334,32 +262,27 @@ def forest_components(
     # vertex-sized join on the hot path.
     if not targets_in_vertices:
         known = verts.select(F.col("vid").alias("p"), F.lit(True).alias("_k"))
-        p = _c(p.join(_b(known) if fused else known, "p", "left").select(
+        p = p.join(known, "p", "left").select(
             "vid", F.when(F.col("_k").isNotNull(), F.col("p")).otherwise(F.col("vid")).alias("p")
-        ))
+        )
     pp = p.select(F.col("vid").alias("p"), F.col("p").alias("_pp"))
-    p = _c(p.join(_b(pp), "p", "left").select(
+    p = p.join(_b(pp), "p", "left").select(
         "vid",
         F.when(F.col("_pp") == F.col("vid"), F.least("vid", "p"))
         .otherwise(F.col("p"))
         .alias("p"),
-    ))
-    cur = cut_lineage(p, eager_stats=fused)
+    )
+    cur = cut_lineage(p)
     converged = False
     for it in range(max_doublings):
         pp = cur.select(F.col("vid").alias("p"), F.col("p").alias("_pp"))
         obs = Observation(f"forest_{it}")
         nxt = (
-            _c(cur.join(_b(pp), "p")
-               .select("vid", F.col("_pp").alias("p"), (F.col("_pp") != F.col("p")).alias("_chg")))
+            cur.join(_b(pp), "p")
+            .select("vid", F.col("_pp").alias("p"), (F.col("_pp") != F.col("p")).alias("_chg"))
             .observe(obs, F.sum(F.col("_chg").cast("long")).alias("metric"))
         )
-        # eager_stats under fused: see connected_components — keeps the
-        # checkpointed pointer table's size estimate REAL so the next
-        # doubling round stays exchange-free
-        cur = cut_lineage(nxt.select("vid", "p"), eager_stats=fused)
-        if fused:
-            cur = cur.coalesce(1)
+        cur = cut_lineage(nxt.select("vid", "p"))
         if int(obs.get["metric"] or 0) == 0:
             converged = True
             break
@@ -368,7 +291,7 @@ def forest_components(
             best.select("src", "dst"), vertices=verts, already_symmetric=False
         )
     mins = cur.groupBy("p").agg(F.min("vid").alias("label"))
-    return _c(cur.join(_b(mins), "p").select("vid", "label"))
+    return cur.join(_b(mins), "p").select("vid", "label")
 
 
 def connected_components_csr(

@@ -61,7 +61,9 @@ Scale design (same shape as the CC/PageRank superstep loops):
     window (no single-task funnel for hub vertices);
   - per-superstep lineage is cut (and the loop made resumable) through
     SuperstepLedger, with the changed-count riding the checkpoint
-    materialization as an Observation — one Spark job per superstep.
+    materialization as an Observation instead of a separate count
+    action (a superstep still runs several Spark jobs: AQE query
+    stages and broadcast builds each run as their own).
 """
 
 from __future__ import annotations
@@ -172,7 +174,7 @@ def label_propagation(
     non-fixpoint terminal state of these dynamics — module docstring),
     returning the current phase.  The check is a vertex-sized join
     against the previous round's checkpointed state and a counter in
-    the same single-job Observation.  A ``resume_from`` state written
+    the same Observation.  A ``resume_from`` state written
     by this operator carries ``_prev``/``_chg``, so the cycle check
     and delta frontier re-arm immediately and a run INTERRUPTED before
     its terminal round resumes exactly, oscillators included.  Two

@@ -64,7 +64,8 @@ def pagerank(
     table is pre-partitioned by ``dst`` once, so a whole superstep runs
     with ZERO shuffle exchange (broadcast join preserves the scan's
     dst-partitioning through the contribution aggregate, and the
-    finalize/L1 joins broadcast their vertex-sized sides too).  The
+    finalize/L1 joins broadcast their vertex-sized sides too; each
+    broadcast is built by a Spark job of its own).  The
     edge table itself stays fully distributed — unlike the CSR fast
     path, only the vertex VECTOR must fit a broadcast (the same
     envelope as the reference's dense rank array).  Above the
@@ -184,27 +185,7 @@ def _pagerank_run(
         # off its cache-filling aggregation — no second full-scan job.
         n_dangling, m_edges = fold_stats
         eparts = min(shuffle_parts, max(1, -(-m_edges // 4_000_000))) if use_bcast else None
-        # fused single-partition regime: when BOTH the vertex state and
-        # the edge table fit one size-derived partition, stack a
-        # coalesce(1) on the repartition (same rows, same order — the
-        # 1-partition exchange output is unchanged; coalesce only turns
-        # the partitioning metadata into SinglePartition, which
-        # satisfies every required distribution).  Every per-superstep
-        # join then runs as an in-stage shuffled-hash join: ZERO
-        # exchanges AND zero broadcast-build sub-jobs — one Spark job
-        # per superstep batch (measured 5 → 1 at sf0.1; results
-        # bitwise identical).  At scale eparts > 1 and the gate never
-        # fires.
-        # SPARK_GRAFT_PR_FUSED=0 forces the broadcast-hint DSL path in
-        # the same regime — the parity test pins both paths bitwise
-        import os as _os
-
-        use_fused = bool(use_bcast and vparts == 1 and eparts == 1) and _os.environ.get(
-            "SPARK_GRAFT_PR_FUSED", "1"
-        ) != "0"
         b = base.repartition(vparts, "vid") if use_bcast else base.repartition("vid")
-        if use_fused:
-            b = b.coalesce(1)
         it = 0
         init = 1.0 / n
         state = b.select(
@@ -229,7 +210,6 @@ def _pagerank_run(
                 or 0.0
             )
     else:
-        use_fused = False
         if use_bcast:
             base = base.repartition(vparts, "vid").persist(StorageLevel.MEMORY_AND_DISK)
         else:
@@ -265,10 +245,7 @@ def _pagerank_run(
         # from the edge COUNT (~4M int-pair rows ≈ 64 MB per task,
         # guide §2.2), capped at the session's shuffle partitioning —
         # NOT a per-core constant, so a cluster-sized session fans out.
-        e = e_raw.repartition(eparts, "dst")
-        if use_fused:
-            e = e.coalesce(1)
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
+        e = e_raw.repartition(eparts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     else:
         e = e_raw.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
     # e's cache fills during the FIRST superstep batch (reading e_raw,
@@ -303,59 +280,17 @@ def _pagerank_run(
             *cols
         )
 
-    # fused regime: the whole superstep batch is built by ONE spark.sql
-    # call over temp views instead of ~45 py4j DataFrame/Column calls —
-    # measured ~0.2 s of per-batch driver time, which had become the
-    # largest fixed cost of the loop.  The SQL reproduces the exact
-    # expression tree (float literals via repr round-trip exactly) and
-    # the same join shapes: in-stage shuffled-hash joins over
-    # SinglePartition tables (COALESCE(1) hints re-stamp the join
-    # outputs), no broadcast-build sub-jobs — one Spark job per batch.
-    # Results are bitwise-identical to the DSL chain (pinned by test).
-    if use_fused:
-        import uuid
-
-        _vtag = uuid.uuid4().hex[:10]
-        _ev, _sv = f"pr_e_{_vtag}", f"pr_state_{_vtag}"
-        e.createOrReplaceTempView(_ev)
-        _d1, _d = repr(1.0 - damping), repr(damping)
-
-        def _step_sql(src_rel: str, dangling_mass: float, carry_prev: bool) -> str:
-            prevcol = ", s.rank AS _prev" if carry_prev else ""
-            dm = repr(float(dangling_mass))
-            return (
-                f"SELECT /*+ SHUFFLE_HASH(c) */ s.vid, "
-                f"({_d1} * s.p) + {_d} * (coalesce(c._contrib, 0.0D) + {dm} * s.p) AS rank, "
-                f"s.deg, s.p{prevcol} "
-                f"FROM {src_rel} s LEFT JOIN ("
-                f"SELECT /*+ SHUFFLE_HASH(r) */ e.dst AS vid, sum(r._c) AS _contrib "
-                f"FROM {_ev} e JOIN (SELECT vid AS src, rank / deg AS _c FROM {src_rel} WHERE deg > 0) r "
-                f"ON e.src = r.src GROUP BY e.dst) c ON s.vid = c.vid"
-            )
-
-        def _batch_df(steps: int, dangling_mass: float) -> DataFrame:
-            parts, src = [], _sv
-            for k in range(steps - 1):
-                parts.append(f"s{k} AS ({_step_sql(src, dangling_mass, False)})")
-                src = f"s{k}"
-            body = _step_sql(src, dangling_mass, True)
-            return spark.sql(("WITH " + ", ".join(parts) + " " if parts else "") + body)
-
     from pyspark.sql import Observation
 
     while it < cap:
         steps = min(batch, cap - it)
-        if use_fused:
-            state.createOrReplaceTempView(_sv)
-            cur = _batch_df(steps, dangling)  # dangling is 0 whenever steps > 1
-        else:
-            cur = state
-            for _ in range(steps - 1):
-                cur = one_step(cur, dangling)  # dangling is 0 whenever steps > 1
-            cur = one_step(cur, dangling, carry_prev=True)
+        cur = state
+        for _ in range(steps - 1):
+            cur = one_step(cur, dangling)  # dangling is 0 whenever steps > 1
+        cur = one_step(cur, dangling, carry_prev=True)
         it += steps
         # L1 + next dangling mass ride the checkpoint materialization
-        # (Observation) — ONE Spark job per batch of supersteps
+        # (Observation) instead of a separate stats action per batch
         obs = Observation(f"pr_{it}")
         staged = cur.observe(
             obs,
@@ -367,12 +302,6 @@ def _pagerank_run(
             state = ledger.record(it, staged, n_active=n, observation=obs)
         else:
             state = cut_lineage(staged)
-        if use_fused:
-            # restore SinglePartition metadata on the checkpointed /
-            # parquet-reread state (a no-op narrow transform on an
-            # already-1-partition table) so the next batch stays
-            # exchange-free
-            state = state.coalesce(1)
         got = obs.get
         l1, dangling = float(got["metric"]), float(got["dangling"] or 0.0)
         if e_raw_live:
@@ -383,9 +312,6 @@ def _pagerank_run(
         if l1 < eps:
             break
 
-    if use_fused:
-        spark.catalog.dropTempView(_ev)
-        spark.catalog.dropTempView(_sv)
     e.unpersist()
     base.unpersist()
     return state.select("vid", "rank")

@@ -34,42 +34,19 @@ def no_adaptive(spark: SparkSession, shuffle_partitions: int | None = None):
     (rows/bytes per the guide's §2.2 partition sizing, e.g. ~4M edge
     rows per partition), which AQE's coalescing would otherwise have
     provided.  All settings are restored on exit.
-
-    When the caller declares the SINGLE-partition regime
-    (``shuffle_partitions == 1``), ``spark.sql.maxSinglePartitionBytes``
-    is raised for the block: EnsureRequirements exempts a
-    SinglePartition join input from its co-partition re-shuffle only
-    when the input's LOGICAL size estimate is below that limit
-    (default 128 MB), and the size-in-bytes-only estimator multiplies
-    children sizes through every join, so a superstep plan built over a
-    checkpointed join output blows past the limit by orders of
-    magnitude while its TRUE size is bounded by the caller's regime
-    gate (one ~64 MB partition).  Without the raise, every
-    per-superstep join re-shuffles both inputs to hashpartitioning(k, 1)
-    — measured, and visible as ENSURE_REQUIREMENTS exchanges over
-    Coalesce(1) children.
     """
     key = "spark.sql.adaptive.enabled"
     skey = "spark.sql.shuffle.partitions"
-    mkey = "spark.sql.maxSinglePartitionBytes"
     old = spark.conf.get(key)
     olds = spark.conf.get(skey)
-    oldm = spark.conf.get(mkey)
     spark.conf.set(key, "false")
     if shuffle_partitions is not None:
         spark.conf.set(skey, str(max(1, int(shuffle_partitions))))
-        if int(shuffle_partitions) <= 1:
-            # Long.MaxValue: the estimates being compared are PRODUCTS
-            # of join-children sizes (and products of products through a
-            # chained superstep), so any finite "reasonable" limit is
-            # exceeded while the true size stays gate-bounded
-            spark.conf.set(mkey, str((1 << 63) - 1))
     try:
         yield
     finally:
         spark.conf.set(key, old)
         spark.conf.set(skey, olds)
-        spark.conf.set(mkey, oldm)
 
 # Shuffle partitions sized to cores for local runs.  On a 1000-executor
 # cluster this would be ~2-3x total cores, set at submit time; AQE

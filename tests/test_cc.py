@@ -86,12 +86,14 @@ def test_forest_matches_general_cc_on_chains_and_mutual_pairs(spark):
     ]
     vids = [0, 1, 2, 3, 5, 7, 10, 11, 12, 99]
     best, verts = _forest(spark, pointers, vids)
-    got = _labels(forest_components(best, verts))
     want = _labels(
         connected_components(best.select("src", "dst"), vertices=verts)
     )
-    assert got == want
-    assert got[99] == 99 and got[7] == 0 and got[11] == 10
+    # small=True is the broadcast-join mode affinity uses below its gate
+    for small in (False, True):
+        got = _labels(forest_components(best, verts, small=small))
+        assert got == want
+        assert got[99] == 99 and got[7] == 0 and got[11] == 10
 
 
 def test_forest_deep_chain_log_doublings(spark):

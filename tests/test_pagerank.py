@@ -87,33 +87,17 @@ def test_check_every_batching_matches(spark):
 
 def test_broadcast_and_shuffle_plans_agree(spark):
     # the vertex-count-gated broadcast fast path must match the
-    # unbounded shuffle-join plan to float re-association tolerance
-    from tests.oracles import seeded_er_edges
-
-    edges = seeded_er_edges(120, 0.05, seed=21)
-    e = make_edges(spark, edges)
-    b = {r["vid"]: r["rank"] for r in pagerank(e, max_iterations=8, broadcast_threshold=1 << 20).collect()}
-    s = {r["vid"]: r["rank"] for r in pagerank(e, max_iterations=8, broadcast_threshold=0).collect()}
-    assert b.keys() == s.keys()
-    assert all(abs(b[k] - s[k]) < 1e-12 for k in b)
-
-
-def test_fused_sql_batch_matches_dsl_bitwise(spark, monkeypatch):
-    # the fused single-partition path builds each superstep batch with
-    # one spark.sql call; SPARK_GRAFT_PR_FUSED=0 forces the
-    # broadcast-hint DSL chain in the same regime.  Ranks must be
-    # BITWISE identical (same join shapes, same float expression tree),
-    # with and without dangling vertices, batched and unbatched.
+    # unbounded shuffle-join plan to float re-association tolerance:
+    # per-step checks, batched checks on a graph with no dangling
+    # vertex, and a graph with one (998 dangles)
     und = seeded_er_edges(60, 0.08, seed=31)
-    sym = und + [(v, u, w) for u, v, w in und]          # no dangling
-    dangling = und + [(997, 998, 1.0)]                  # 998 dangles
-    for edges, check_every in [(sym, 3), (sym, 1), (dangling, 1)]:
+    sym = und + [(v, u, w) for u, v, w in und]
+    dangling = und + [(997, 998, 1.0)]
+    cases = [(seeded_er_edges(120, 0.05, seed=21), 1, 8), (sym, 3, 7), (dangling, 1, 7)]
+    for edges, check_every, iters in cases:
         e = make_edges(spark, edges)
-        fused = pagerank(e, max_iterations=7, check_every=check_every).orderBy("vid").collect()
-        monkeypatch.setenv("SPARK_GRAFT_PR_FUSED", "0")
-        dsl = pagerank(e, max_iterations=7, check_every=check_every).orderBy("vid").collect()
-        monkeypatch.delenv("SPARK_GRAFT_PR_FUSED")
-        assert [r["vid"] for r in fused] == [r["vid"] for r in dsl]
-        got = np.array([r["rank"] for r in fused])
-        want = np.array([r["rank"] for r in dsl])
-        assert np.array_equal(got, want), f"max diff {np.abs(got - want).max()}"
+        kw = dict(max_iterations=iters, check_every=check_every)
+        b = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=1 << 20, **kw).collect()}
+        s = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=0, **kw).collect()}
+        assert b.keys() == s.keys()
+        assert all(abs(b[k] - s[k]) < 1e-12 for k in b)
