@@ -85,19 +85,26 @@ def test_check_every_batching_matches(spark):
     _assert_close(b, a, atol=1e-12)
 
 
+def _assert_broadcast_and_shuffle_agree(spark, edges, check_every, iters):
+    e = make_edges(spark, edges)
+    kw = dict(max_iterations=iters, check_every=check_every)
+    b = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=1 << 20, **kw).collect()}
+    s = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=0, **kw).collect()}
+    assert b.keys() == s.keys()
+    assert all(abs(b[k] - s[k]) < 1e-12 for k in b)
+
+
 def test_broadcast_and_shuffle_plans_agree(spark):
     # the vertex-count-gated broadcast fast path must match the
-    # unbounded shuffle-join plan to float re-association tolerance:
-    # per-step checks, batched checks on a graph with no dangling
-    # vertex, and a graph with one (998 dangles)
+    # unbounded shuffle-join plan to float re-association tolerance
+    _assert_broadcast_and_shuffle_agree(spark, seeded_er_edges(120, 0.05, seed=21), 1, 8)
+
+
+def test_broadcast_and_shuffle_plans_agree_batched_and_dangling(spark):
+    # the same agreement with batched checks on a graph with no
+    # dangling vertex, and per-step checks on a graph with one (998)
     und = seeded_er_edges(60, 0.08, seed=31)
     sym = und + [(v, u, w) for u, v, w in und]
     dangling = und + [(997, 998, 1.0)]
-    cases = [(seeded_er_edges(120, 0.05, seed=21), 1, 8), (sym, 3, 7), (dangling, 1, 7)]
-    for edges, check_every, iters in cases:
-        e = make_edges(spark, edges)
-        kw = dict(max_iterations=iters, check_every=check_every)
-        b = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=1 << 20, **kw).collect()}
-        s = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=0, **kw).collect()}
-        assert b.keys() == s.keys()
-        assert all(abs(b[k] - s[k]) < 1e-12 for k in b)
+    for edges, check_every in [(sym, 3), (dangling, 1)]:
+        _assert_broadcast_and_shuffle_agree(spark, edges, check_every, 7)
