@@ -191,20 +191,30 @@ class SuperstepLedger:
         """Load the latest durable state for ``algo`` under ``directory``.
 
         Returns ``(superstep, state_df)`` or None when nothing usable
-        exists (fresh start)."""
+        exists (fresh start).  An unparseable FINAL line is the torn
+        append of a driver killed mid-write: it is ignored and cut off
+        the file, so the resumed run appends on a line of its own.  A
+        corrupt earlier line still raises."""
         path = os.path.join(directory, "ledger.jsonl")
         if not os.path.exists(path):
             return None
         best: dict | None = None
-        with open(path) as f:
-            for line in f:
+        with open(path, "rb") as f:
+            lines = f.readlines()
+        for i, line in enumerate(lines):
+            try:
                 rec = json.loads(line)
-                if rec.get("algo") != algo or not rec.get("state_path"):
-                    continue
-                marker = os.path.join(rec["state_path"], "_SUCCESS")
-                if os.path.exists(marker):
-                    if best is None or rec["superstep"] > best["superstep"]:
-                        best = rec
+            except ValueError:
+                if i < len(lines) - 1:
+                    raise
+                os.truncate(path, sum(map(len, lines[:-1])))
+                break
+            if rec.get("algo") != algo or not rec.get("state_path"):
+                continue
+            marker = os.path.join(rec["state_path"], "_SUCCESS")
+            if os.path.exists(marker):
+                if best is None or rec["superstep"] > best["superstep"]:
+                    best = rec
         if best is None:
             return None
         return best["superstep"], spark.read.parquet(best["state_path"])

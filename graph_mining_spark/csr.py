@@ -171,6 +171,18 @@ class CsrShards:
     def index_of(self, vid_array: np.ndarray) -> np.ndarray:
         return np.searchsorted(self.vids, vid_array)
 
+    def align(self, state: DataFrame, column: str) -> np.ndarray:
+        """``state``'s ``column`` as a vector in dense-index order — the
+        starting point of a resumed CSR loop.  Only ``vid`` and
+        ``column`` are read; ``state`` must hold every vertex once."""
+        pdf = state.select(F.col("vid").cast("long"), column).toPandas()
+        vids = pdf["vid"].to_numpy(dtype=np.int64)
+        if len(vids) != self.n or not np.array_equal(np.sort(vids), self.vids):
+            raise ValueError(f"state to resume from does not hold the graph's {self.n} vertices")
+        out = np.empty(self.n, dtype=pdf[column].dtype)
+        out[self.index_of(vids)] = pdf[column].to_numpy()
+        return out
+
     def unpersist(self) -> None:
         if self._cleanup:
             try:
@@ -305,7 +317,8 @@ def materialize_csr_shards(
         import pandas as pd
 
         ddf = spark.createDataFrame(
-            pd.DataFrame({"vid": vids, "idx": np.arange(n, dtype=np.int32)})
+            pd.DataFrame({"vid": vids, "idx": np.arange(n, dtype=np.int32)}),
+            schema="vid long, idx int",
         )
         to_write = (
             base.select(
@@ -336,7 +349,9 @@ def materialize_csr_shards(
         # count starts the Python worker runner
         import pandas as pd
 
-        shard_files = spark.createDataFrame(pd.DataFrame({"path": files})).coalesce(1)
+        shard_files = spark.createDataFrame(
+            pd.DataFrame({"path": files}), schema="path string"
+        ).coalesce(1)
     else:
         # exact partition count up front (sc.parallelize) — a
         # createDataFrame + repartition pair costs two extra tiny jobs

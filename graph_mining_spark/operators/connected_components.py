@@ -17,6 +17,9 @@ are non-increasing — so the fixpoint assigns every vertex the minimum
 vid of its component, exactly the reference's canonical labeling.
 
 Scale design:
+  - graphs with at most ``broadcast_threshold`` vertices run on CSR
+    shards (:func:`connected_components_csr`); the rest is about the
+    DataFrame supersteps that larger graphs run;
   - the edge table is hash-partitioned by ``src`` ONCE and persisted;
     each superstep only shuffles the (much smaller) label table;
   - step (1) is delta-based: only labels that changed last round are
@@ -50,16 +53,20 @@ def connected_components(
     """Return ``(vid: long, label: long)`` with label = min vid per component.
 
     ``vertices`` (optional, one ``vid`` column) adds isolated vertices
-    that appear in no edge row; they label as themselves.
+    that appear in no edge row; they label as themselves.  Edges with
+    an endpoint outside ``vertices`` are ignored.
     ``resume_from``: (superstep, state) from SuperstepLedger.resume().
 
-    ``broadcast_threshold``: when the CHANGED frontier from the
-    previous superstep is at or below this row count, the frontier
-    joins the edge table by BROADCAST instead of a shuffle join — the
-    frontier size is already known exactly from the superstep's
-    Observation, so the gate is adaptive: big graphs shuffle in the
-    early wide rounds and broadcast the shrinking tail, small graphs
-    broadcast throughout.  Labels are identical either way.
+    ``broadcast_threshold``: the vertex-count gate to the CSR path.  At
+    or below it the call runs :func:`connected_components_csr` (label
+    vector on the driver, edges in shards).  Above it the DataFrame
+    supersteps run, and there it also gates the frontier join: when
+    the CHANGED frontier from the previous superstep is at or below
+    this row count, the frontier joins the edge table by BROADCAST
+    instead of a shuffle join — the frontier size is already known
+    exactly from the superstep's Observation, so big graphs shuffle in
+    the early wide rounds and broadcast the shrinking tail.  Labels are
+    identical on every path.
     """
     if already_symmetric:
         sym = edges.select("src", "dst")
@@ -71,7 +78,6 @@ def connected_components(
         fwd = edges.select("src", "dst")
         sym = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    spark = edges.sparkSession
     # skip the redundant cache copy when the caller already persisted
     # the edge table (the union/select scans then read that cache)
     if edges.storageLevel.useMemory or edges.storageLevel.useDisk:
@@ -79,130 +85,117 @@ def connected_components(
     else:
         raw = sym.persist(StorageLevel.MEMORY_AND_DISK)
     m = raw.count()
-    # Small-graph regime (guide §1.2/§2.2): when every frontier fits the
-    # broadcast gate (n ≤ 2m bounds the vertex count by the edge count),
-    # the whole run needs NO data-scale exchange — the edge table is
-    # dst-partitioned once so the neighbor-min aggregation is
-    # exchange-free behind a broadcast frontier join, and the
-    # vertex-sized joins broadcast their small side.  AQE is disabled
-    # for the run in that regime: a cache persisted under AQE hides its
-    # partitioning (forcing re-exchanges) and every AQE query stage is
-    # an extra driver round-trip (see session.no_adaptive).  Above the
-    # gate the round-4/5 plan (src-partitioned edges, adaptive frontier
-    # broadcast, AQE skew handling) is unchanged.
+    # vertex-count gate: n ≤ 2m, so a small edge count decides it
+    # without counting vertices; a larger one pays one cheap
+    # cached-table pass, and the checkpointed vertex set is REUSED for
+    # the labels init below
     verts_cut = None
     if 2 * m <= broadcast_threshold:
-        small = True
+        use_csr = True
     elif m <= 8_000_000:
-        # one cheap cached-table pass gives n for the gate; the
-        # checkpointed vertex set is REUSED for the labels init below
         verts_plan = (
             vertex_ids(raw)
             if vertices is None
             else vertices.select(F.col("vid").cast("long")).distinct()
         )
         verts_cut = cut_lineage(verts_plan)
-        small = verts_cut.count() <= broadcast_threshold
+        use_csr = verts_cut.count() <= broadcast_threshold
     else:
-        small = False
-    import contextlib
+        use_csr = False
+    if use_csr:
+        raw.unpersist()
+        if vertices is not None:
+            # the shard build rejects endpoints outside `vertices`
+            vs = vertices.select(F.col("vid").cast("long"))
+            sym = sym.join(vs.withColumnRenamed("vid", "src"), "src", "left_semi").join(
+                vs.withColumnRenamed("vid", "dst"), "dst", "left_semi"
+            )
+        return connected_components_csr(
+            sym, vertices=vertices, max_supersteps=max_supersteps, already_symmetric=True,
+            ledger=ledger, resume_from=resume_from,
+        )
 
-    from graph_mining_spark.session import no_adaptive
+    e = raw.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
 
-    with no_adaptive(spark, max(1, -(-m // 4_000_000))) if small else contextlib.nullcontext():
-        if small:
-            eparts = max(1, -(-m // 4_000_000))
-            # materialized lazily by superstep 1 (reads the cached raw)
-            e = raw.repartition(eparts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    # derive the vertex set from the PERSISTED table — vertex_ids(sym)
+    # would re-execute the whole symmetrize/derivation plan twice
+    if verts_cut is not None:
+        verts = verts_cut
+    else:
+        verts = vertex_ids(e) if vertices is None else vertices.select(F.col("vid").cast("long")).distinct()
+
+    if resume_from is not None:
+        start, labels = resume_from
+        labels = labels.select("vid", "label")
+        # everything may still be active after a blind resume
+        changed = labels.select("vid", "label")
+    else:
+        start = 0
+        labels = cut_lineage(verts.select("vid", F.col("vid").alias("label")))
+        changed = labels
+    n_changed = None  # unknown until the first Observation lands
+
+    from pyspark.sql import Observation
+
+    step = start
+    while step < max_supersteps:
+        step += 1
+        # (1) delta neighbor-min: propagate only from last round's frontier
+        if step == start + 1 and resume_from is None and vertices is None:
+            # round 1: labels are the identity, so the edges⋈labels join
+            # collapses to a bare groupBy-min over the edge table.  Only
+            # valid when the vertex set derives from the edges: with a
+            # caller-supplied subset, a bare min(src) could propagate an
+            # out-of-set endpoint id as a label.
+            nbr_min = e.groupBy(F.col("dst").alias("vid")).agg(F.min("src").alias("nbr_label"))
         else:
-            e = raw.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-
-        # derive the vertex set from the PERSISTED table — vertex_ids(sym)
-        # would re-execute the whole symmetrize/derivation plan twice
-        if verts_cut is not None:
-            verts = verts_cut
+            frontier = changed.withColumnRenamed("vid", "src")
+            if n_changed is not None and n_changed <= broadcast_threshold:
+                frontier = F.broadcast(frontier)
+            nbr_min = (
+                e.join(frontier, "src")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.min("label").alias("nbr_label"))
+            )
+        stepped = (
+            labels.join(nbr_min, "vid", "left")
+            .select("vid", F.least("label", F.coalesce("nbr_label", "label")).alias("label"), F.col("label").alias("_prev"))
+        )
+        # (2) pointer jumping: label ← label[label]
+        parent = stepped.select(F.col("vid").alias("_p_vid"), F.col("label").alias("_p_label"))
+        jumped = (
+            stepped.join(parent, stepped.label == parent._p_vid, "left")
+            .select(
+                "vid",
+                F.coalesce("_p_label", "label").alias("label"),
+                "_prev",
+            )
+        )
+        # convergence metric rides the checkpoint materialization
+        # (Observation) instead of a separate count action
+        obs = Observation(f"cc_{step}")
+        staged = jumped.select(
+            "vid", "label", (F.col("label") != F.col("_prev")).alias("_chg")
+        )
+        staged = staged.observe(
+            obs,
+            F.sum(F.col("_chg").cast("long")).alias("metric"),
+            F.sum(F.col("_chg").cast("long")).alias("n_active"),
+        )
+        if ledger is not None:
+            state = ledger.record(step, staged, observation=obs)
+            n_changed = int(ledger.records[-1]["metric"])
         else:
-            verts = vertex_ids(e) if vertices is None else vertices.select(F.col("vid").cast("long")).distinct()
+            state = cut_lineage(staged)
+            n_changed = int(obs.get["metric"] or 0)
+        changed = state.filter("_chg").select("vid", "label")
+        labels = state.select("vid", "label")
+        if n_changed == 0:
+            break
 
-        if resume_from is not None:
-            start, labels = resume_from
-            labels = labels.select("vid", "label")
-            # everything may still be active after a blind resume
-            changed = labels.select("vid", "label")
-        else:
-            start = 0
-            labels = verts.select("vid", F.col("vid").alias("label"))
-            if small:
-                labels = labels.repartition(max(1, -(-2 * m // 2_000_000)), "vid")
-            labels = cut_lineage(labels)
-            changed = labels
-        n_changed = None  # unknown until the first Observation lands
-
-        from pyspark.sql import Observation
-
-        step = start
-        while step < max_supersteps:
-            step += 1
-            # (1) delta neighbor-min: propagate only from last round's frontier
-            if step == start + 1 and resume_from is None and vertices is None:
-                # round 1: labels are the identity, so the edges⋈labels join
-                # collapses to a bare groupBy-min over the edge table.  Only
-                # valid when the vertex set derives from the edges: with a
-                # caller-supplied subset, a bare min(src) could propagate an
-                # out-of-set endpoint id as a label.
-                nbr_min = e.groupBy(F.col("dst").alias("vid")).agg(F.min("src").alias("nbr_label"))
-            else:
-                frontier = changed.withColumnRenamed("vid", "src")
-                if small or (n_changed is not None and n_changed <= broadcast_threshold):
-                    frontier = F.broadcast(frontier)
-                nbr_min = (
-                    e.join(frontier, "src")
-                    .groupBy(F.col("dst").alias("vid"))
-                    .agg(F.min("label").alias("nbr_label"))
-                )
-            if small:
-                nbr_min = F.broadcast(nbr_min)
-            stepped = (
-                labels.join(nbr_min, "vid", "left")
-                .select("vid", F.least("label", F.coalesce("nbr_label", "label")).alias("label"), F.col("label").alias("_prev"))
-            )
-            # (2) pointer jumping: label ← label[label]
-            parent = stepped.select(F.col("vid").alias("_p_vid"), F.col("label").alias("_p_label"))
-            if small:
-                parent = F.broadcast(parent)
-            jumped = (
-                stepped.join(parent, stepped.label == parent._p_vid, "left")
-                .select(
-                    "vid",
-                    F.coalesce("_p_label", "label").alias("label"),
-                    "_prev",
-                )
-            )
-            # convergence metric rides the checkpoint materialization
-            # (Observation) instead of a separate count action
-            obs = Observation(f"cc_{step}")
-            staged = jumped.select(
-                "vid", "label", (F.col("label") != F.col("_prev")).alias("_chg")
-            )
-            staged = staged.observe(
-                obs,
-                F.sum(F.col("_chg").cast("long")).alias("metric"),
-                F.sum(F.col("_chg").cast("long")).alias("n_active"),
-            )
-            if ledger is not None:
-                state = ledger.record(step, staged, observation=obs)
-                n_changed = int(ledger.records[-1]["metric"])
-            else:
-                state = cut_lineage(staged)
-                n_changed = int(obs.get["metric"] or 0)
-            changed = state.filter("_chg").select("vid", "label")
-            labels = state.select("vid", "label")
-            if n_changed == 0:
-                break
-
-        e.unpersist()
-        raw.unpersist()  # no-op when the small path already released it
-        return labels
+    e.unpersist()
+    raw.unpersist()
+    return labels
 
 
 def forest_components(
@@ -303,18 +296,24 @@ def connected_components_csr(
     already_symmetric: bool = False,
     shards=None,
     ledger: SuperstepLedger | None = None,
+    resume_from: tuple[int, DataFrame] | None = None,
 ) -> DataFrame:
     """CSR fast path: same min-vid fixpoint as
-    :func:`connected_components`, but each superstep is ONE distributed
-    min-gather over the salted CSR shards plus driver-side NumPy
-    pointer jumping (labels = labels[labels] — union-find path halving
-    on a dense array, the direct analog of the reference's
-    ComponentSequence flatten, asynchronous_union_find.h:117-126).
+    :func:`connected_components`, but each superstep is ONE min-gather
+    over the salted CSR shards plus driver-side NumPy pointer jumping
+    (labels = labels[labels] — union-find path halving on a dense
+    array, the direct analog of the reference's ComponentSequence
+    flatten, asynchronous_union_find.h:117-126).
+
+    ``resume_from``: (superstep, state) from SuperstepLedger.resume();
+    only its ``vid`` and ``label`` columns are read, so a state written
+    by either path resumes, and the superstep count continues from it.
 
     The label VECTOR lives on the driver (~10⁸-vertex envelope); the
     edge set stays distributed.  Use the DataFrame variant beyond that.
     """
     import numpy as np
+    import pandas as pd
 
     from graph_mining_spark.csr import gather_min, materialize_csr_shards
 
@@ -328,53 +327,54 @@ def connected_components_csr(
             partitions=partitions,
             salt_threshold=salt_threshold,
         )
-    n = shards.n
-    if n == 0:
-        return spark.createDataFrame([], "vid long, label long")
-    from graph_mining_spark.session import no_adaptive
+    try:
+        n = shards.n
+        if n == 0:
+            return spark.createDataFrame([], "vid long, label long")
+        from graph_mining_spark.session import no_adaptive
 
-    labels = np.arange(n, dtype=np.int64)
-    # AQE adds a per-gather query-stage round-trip with nothing to adapt
-    with no_adaptive(spark):
-        for it in range(1, max_supersteps + 1):
-            new = gather_min(shards, labels)
-            new = np.minimum(new, labels)
-            # pointer jumping to a fixpoint is cheap on the driver
-            while True:
-                jumped = new[new]
-                if np.array_equal(jumped, new):
-                    break
-                new = jumped
-            n_changed = int(np.count_nonzero(new != labels))
-            if ledger is not None:
-                # metrics-only unless this superstep durably checkpoints
-                # (mirrors pagerank_csr — the CSR loop's true gather count
-                # can differ from the DF variant's, so callers measuring
-                # per-superstep throughput need the real number)
-                import pandas as pd
-
-                state = None
-                if ledger.will_checkpoint(it):
-                    state = spark.createDataFrame(
-                        pd.DataFrame({"vid": shards.vids, "label": shards.vids[new]}),
-                        schema="vid long, label long",
+        if resume_from is None:
+            start, labels = 0, np.arange(n, dtype=np.int64)
+        else:
+            start = resume_from[0]
+            labels = shards.index_of(shards.align(resume_from[1], "label")).astype(np.int64)
+        # AQE adds a per-gather query-stage round-trip with nothing to adapt
+        with no_adaptive(spark):
+            for it in range(start + 1, max_supersteps + 1):
+                new = gather_min(shards, labels)
+                new = np.minimum(new, labels)
+                # pointer jumping to a fixpoint is cheap on the driver
+                while True:
+                    jumped = new[new]
+                    if np.array_equal(jumped, new):
+                        break
+                    new = jumped
+                n_changed = int(np.count_nonzero(new != labels))
+                if ledger is not None:
+                    # metrics-only unless this superstep durably checkpoints
+                    # (mirrors pagerank_csr — the CSR loop's true gather count
+                    # can differ from the DF variant's, so callers measuring
+                    # per-superstep throughput need the real number)
+                    state = None
+                    if ledger.will_checkpoint(it):
+                        state = spark.createDataFrame(
+                            pd.DataFrame({"vid": shards.vids, "label": shards.vids[new]}),
+                            schema="vid long, label long",
+                        )
+                    ledger.record(
+                        it, state, metric=float(n_changed), n_active=n_changed,
+                        metrics_only=state is None,
                     )
-                ledger.record(
-                    it, state, metric=float(n_changed), n_active=n_changed,
-                    metrics_only=state is None,
-                )
-            if n_changed == 0:
-                break
-            labels = new
-    import pandas as pd
-
-    out = spark.createDataFrame(
-        pd.DataFrame({"vid": shards.vids, "label": shards.vids[labels]}),
-        schema="vid long, label long",
-    )
-    if own_shards:
-        shards.unpersist()
-    return out
+                if n_changed == 0:
+                    break
+                labels = new
+        return spark.createDataFrame(
+            pd.DataFrame({"vid": shards.vids, "label": shards.vids[labels]}),
+            schema="vid long, label long",
+        )
+    finally:
+        if own_shards:
+            shards.unpersist()
 
 
 def components_as_clusters(labels: DataFrame) -> DataFrame:

@@ -11,7 +11,10 @@ parallel_pagerank.cc:39-91, parallel_pagerank.h:38-55):
     unweighted); dangling-vertex mass is redistributed through the
     restart distribution.
 
-Superstep shape (SURVEY.md §2.2): one edges⋈ranks join hash-partitioned
+Graphs with at most ``broadcast_threshold`` vertices run on CSR shards
+(:func:`pagerank_csr`); larger ones run DataFrame supersteps.
+
+DataFrame superstep shape (SURVEY.md §2.2): one edges⋈ranks join hash-partitioned
 on ``src`` (edge table pre-partitioned once and persisted, so only the
 vertex-sized rank table reshuffles), one groupBy(dst).sum with map-side
 partial aggregation (bounds hub-vertex skew by the map partition count),
@@ -47,31 +50,27 @@ def pagerank(
 
     ``edges`` is interpreted as DIRECTED ``src → dst`` (pass the
     symmetrized table for undirected PageRank).  ``vertices`` (one
-    ``vid`` column) may add vertices with no incident edge rows.
+    ``vid`` column) may add vertices with no incident edge rows; every
+    edge endpoint must be one of them (on the CSR path a violation
+    raises ``ValueError``).
 
-    ``check_every > 1`` chains that many supersteps lazily per
-    materialization + convergence check — the per-superstep driver
-    overhead (planning, checkpoint, stats action) amortizes by that
-    factor, which is what makes the DataFrame mode scale with cores.
-    Only applied when the graph has NO dangling vertices (dangling
-    mass is a per-iteration scalar that forces a sync); the stop
-    condition stays the reference contract — we halt at an iteration
-    whose L1 step-delta < eps, at most ``check_every - 1`` iterations
-    later (i.e. more converged) than with per-step checks.
-
-    ``broadcast_threshold``: when the vertex count is at or below it,
-    the rank vector joins the edge table by BROADCAST and the edge
-    table is pre-partitioned by ``dst`` once, so a whole superstep runs
-    with ZERO shuffle exchange (broadcast join preserves the scan's
-    dst-partitioning through the contribution aggregate, and the
-    finalize/L1 joins broadcast their vertex-sized sides too; each
-    broadcast is built by a Spark job of its own).  The
-    edge table itself stays fully distributed — unlike the CSR fast
-    path, only the vertex VECTOR must fit a broadcast (the same
-    envelope as the reference's dense rank array).  Above the
-    threshold the shuffle-join plan is used — the unbounded 100×
-    path.  Results are identical up to float re-association of the
+    ``broadcast_threshold``: the vertex-count gate to the CSR path.  At
+    or below it the call runs :func:`pagerank_csr` (rank vector on the
+    driver, edges in shards; no Spark job per superstep at these
+    sizes).  Above it the shuffle-join DataFrame supersteps run — the
+    unbounded path.  Results agree up to float re-association of the
     contribution sums.
+
+    ``check_every > 1`` (DataFrame path only; the CSR path checks
+    convergence every superstep at no Spark cost) chains that many
+    supersteps lazily per materialization + convergence check — the
+    per-superstep driver overhead (planning, checkpoint, stats action)
+    amortizes by that factor.  Only applied when the graph has NO
+    dangling vertices (dangling mass is a per-iteration scalar that
+    forces a sync); the stop condition stays the reference contract —
+    we halt at an iteration whose L1 step-delta < eps, at most
+    ``check_every - 1`` iterations later (i.e. more converged) than
+    with per-step checks.
     """
     if not (0.0 <= damping < 1.0):
         raise ValueError(f"damping must be in [0, 1), got {damping}")
@@ -79,15 +78,11 @@ def pagerank(
         raise ValueError("approx_precision must be >= 0")
     spark = edges.sparkSession
 
-    # persist the RAW edge selection once; the mode-specific repartition
-    # (by dst for broadcast mode, by src for shuffle mode) happens AFTER
-    # n is known, so only ONE all-edges shuffle is ever paid (the old
-    # code repartitioned by src, then threw that away and repartitioned
-    # by dst again whenever broadcast mode engaged).  When the CALLER
+    # persist the RAW edge selection once; the src repartition happens
+    # only on the DataFrame path, after n is known.  When the CALLER
     # already persisted the edge table, scans below hit that cache
     # directly — a second persist would copy every edge row into a
-    # redundant cache entry (the bench pays this three times per
-    # invocation)
+    # redundant cache entry
     _sel = edges.select("src", "dst")
     _caller_cached = edges.storageLevel.useMemory or edges.storageLevel.useDisk
     e_raw = _sel if _caller_cached else _sel.persist(StorageLevel.MEMORY_AND_DISK)
@@ -95,159 +90,54 @@ def pagerank(
     verts = vertex_ids(e_raw) if vertices is None else vertices.select(F.col("vid").cast("long")).distinct()
 
     out_deg = e_raw.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-
-    import contextlib
-
-    from graph_mining_spark.session import no_adaptive
-
-    fold_stats = None
-    if not source_vids and resume_from is None:
-        # Uniform fresh start (the common case): ONE cache-filling
-        # aggregation over the persisted (vid, deg) table returns
-        # n, the dangling count AND the edge count together — the
-        # separate full-scan `verts.count()` job is gone, and the
-        # restart probability / initial rank become literals applied
-        # after n is known (they were per-row constants anyway).
-        base = verts.join(out_deg, "vid", "left").select(
-            "vid", F.coalesce("deg", F.lit(0)).alias("deg")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        row0 = base.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("deg") == 0, 1).otherwise(0)).alias("dcount"),
-            F.sum("deg").alias("m"),
-        ).first()
-        n = int(row0["n"])
+    base = verts.join(out_deg, "vid", "left")
+    cols = ["vid", F.coalesce("deg", F.lit(0)).alias("deg")]
+    if source_vids:
+        src_set = spark.createDataFrame([(int(s), True) for s in source_vids], "vid long, _is_src boolean")
+        base = base.join(src_set, "vid", "left")
+        cols.append(F.coalesce("_is_src", F.lit(False)).alias("_is_src"))
+    base = base.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE cache-filling aggregation returns n and the dangling count
+    row0 = base.agg(
+        F.count("*").alias("n"),
+        F.sum(F.when(F.col("deg") == 0, 1).otherwise(0)).alias("dcount"),
+    ).first()
+    n, n_dangling = int(row0["n"]), int(row0["dcount"] or 0)
+    if n == 0 or n <= broadcast_threshold:
+        base.unpersist()
+        e_raw.unpersist()
         if n == 0:
-            base.unpersist()
-            e_raw.unpersist()
             return spark.createDataFrame([], "vid long, rank double")
-        fold_stats = (int(row0["dcount"] or 0), int(row0["m"] or 0))
-    else:
-        if source_vids:
-            src_set = spark.createDataFrame([(int(s),) for s in source_vids], "vid long")
-            p_col = F.when(F.col("_is_src"), F.lit(1.0 / len(source_vids))).otherwise(F.lit(0.0))
-            base = (
-                verts.join(out_deg, "vid", "left")
-                .join(src_set.withColumn("_is_src", F.lit(True)), "vid", "left")
-                .select("vid", F.coalesce("deg", F.lit(0)).alias("deg"),
-                        F.coalesce("_is_src", F.lit(False)).alias("_is_src"))
-                .select("vid", "deg", p_col.alias("p"))
-            )
-        else:
-            base = None  # uniform restart, filled after n is known
-        n = verts.count()
-        if n == 0:
-            e_raw.unpersist()
-            return spark.createDataFrame([], "vid long, rank double")
-        if base is None:
-            base = verts.join(out_deg, "vid", "left").select(
-                "vid", F.coalesce("deg", F.lit(0)).alias("deg"), F.lit(1.0 / n).alias("p")
-            )
-
-    use_bcast = n <= broadcast_threshold
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # In broadcast mode the ENTIRE run (cache builds + superstep loop)
-    # executes with AQE off: a table persisted under AQE embeds an
-    # AdaptiveSparkPlan whose output partitioning downstream joins
-    # cannot see, so every vertex-sized join would re-Exchange, and AQE
-    # additionally materializes each query stage as its own driver
-    # round-trip — pure overhead in a regime with no data-scale shuffle
-    # to coalesce and no skew to split (see session.no_adaptive).  The
-    # caches built here are mode-local and released before returning.
-    # residual exchanges (init distinct / vertex joins) sized from the
-    # vertex count rather than the static session default
-    with no_adaptive(spark, max(1, -(-n // 2_000_000))) if use_bcast else contextlib.nullcontext():
-        return _pagerank_run(
-            spark, e_raw, base, n, use_bcast, shuffle_parts, resume_from,
-            source_vids, damping, approx_precision, max_iterations,
-            check_every, ledger, fold_stats=fold_stats,
+        return pagerank_csr(
+            edges, damping=damping, approx_precision=approx_precision,
+            max_iterations=max_iterations, source_vids=source_vids,
+            vertices=vertices, ledger=ledger, resume_from=resume_from,
         )
-
-
-def _pagerank_run(
-    spark, e_raw, base, n, use_bcast, shuffle_parts, resume_from,
-    source_vids, damping, approx_precision, max_iterations, check_every,
-    ledger, fold_stats=None,
-) -> DataFrame:
-    # SIZE-derived vertex partitioning (guide §2.2: partitions in
-    # the 100 MB+ range, not one per core): a ≤131k-row vertex
-    # table is a handful of MB, so the per-superstep vertex-sized
-    # stages run as 1-2 tasks instead of `shuffle.partitions` tiny
-    # ones — measured, the 32-partition vertex state made every
-    # broadcast-build and checkpoint job a 32-task launch for <3 MB
-    # of data.  Above the threshold the session's shuffle
-    # partitioning (cluster-sized at submit time) applies unchanged.
-    vparts = max(1, -(-n // 2_000_000)) if use_bcast else None
-
-    if fold_stats is not None:
-        # fold path (uniform fresh start): `base` is the already-persisted
-        # (vid, deg) table and n / dangling count / edge count were read
-        # off its cache-filling aggregation — no second full-scan job.
-        n_dangling, m_edges = fold_stats
-        eparts = min(shuffle_parts, max(1, -(-m_edges // 4_000_000))) if use_bcast else None
-        b = base.repartition(vparts, "vid") if use_bcast else base.repartition("vid")
-        it = 0
-        init = 1.0 / n
-        state = b.select(
-            "vid", F.lit(init).alias("rank"), "deg", F.lit(init).alias("p")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        if n_dangling == 0:
-            dangling = 0.0
-        elif use_bcast and vparts == 1:
-            # single-partition aggregation = one sequential left fold;
-            # every dangling term is the same literal 1/n and the
-            # interleaved non-dangling terms add exact 0.0 — replicate
-            # the fold on the driver instead of paying a Spark job
-            acc = 0.0
-            for _ in range(n_dangling):
-                acc += init
-            dangling = acc
-        else:
-            dangling = float(
-                state.agg(
-                    F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0)))
-                ).first()[0]
-                or 0.0
-            )
+    if source_vids:
+        p_col = F.when(F.col("_is_src"), F.lit(1.0 / len(source_vids))).otherwise(F.lit(0.0))
     else:
-        if use_bcast:
-            base = base.repartition(vparts, "vid").persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            base = base.repartition("vid").persist(StorageLevel.MEMORY_AND_DISK)
+        p_col = F.lit(1.0 / n)
 
-        if resume_from is not None:
-            it, state = resume_from
-            state = state.select("vid", "rank", "deg", "p").persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            it = 0
-            rank0 = F.col("p")
-            state = base.select("vid", rank0.alias("rank"), "deg", "p").persist(StorageLevel.MEMORY_AND_DISK)
-        # one action: initial dangling mass, dangling-vertex count AND edge
-        # count (m = Σ out-degree, sizing the edge repartition below)
-        row0 = state.agg(
-            F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))).alias("dmass"),
-            F.sum(F.when(F.col("deg") == 0, 1).otherwise(0)).alias("dcount"),
-            F.sum("deg").alias("m"),
-        ).first()
-        dangling = float(row0["dmass"] or 0.0)
-        n_dangling = int(row0["dcount"] or 0)
-        m_edges = int(row0["m"] or 0)
-        eparts = min(shuffle_parts, max(1, -(-m_edges // 4_000_000))) if use_bcast else None
+    b = base.repartition("vid").select("vid", "deg", p_col.alias("p"))
+    if resume_from is None:
+        it, state = 0, b.select("vid", F.col("p").alias("rank"), "deg", "p")
+    else:
+        # only (vid, rank) is read, so a CSR-path state resumes too
+        it, prev = resume_from
+        state = b.join(prev.select("vid", "rank"), "vid").select("vid", "rank", "deg", "p")
+    state = state.persist(StorageLevel.MEMORY_AND_DISK)
+    dangling = 0.0
+    if n_dangling:
+        dangling = float(
+            state.agg(F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0)))).first()[0]
+            or 0.0
+        )
 
     eps = approx_precision * n
     cap = max_iterations if max_iterations is not None else 1_000_000
     batch = check_every if (check_every > 1 and n_dangling == 0) else 1
 
-    if use_bcast:
-        # repartition the edge table by dst ONCE: the per-superstep
-        # broadcast join preserves it, so the contribution groupBy(dst)
-        # aggregates without an exchange.  Partition count is derived
-        # from the edge COUNT (~4M int-pair rows ≈ 64 MB per task,
-        # guide §2.2), capped at the session's shuffle partitioning —
-        # NOT a per-core constant, so a cluster-sized session fans out.
-        e = e_raw.repartition(eparts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        e = e_raw.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    e = e_raw.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
     # e's cache fills during the FIRST superstep batch (reading e_raw,
     # which stays persisted until then) — an eager count here was a
     # whole extra pass over the edge table per call; e_raw is released
@@ -259,7 +149,7 @@ def _pagerank_run(
             F.col("vid").alias("src"), (F.col("rank") / F.col("deg")).alias("_c")
         )
         contribs = (
-            e.join(F.broadcast(rank_src) if use_bcast else rank_src, "src")
+            e.join(rank_src, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("_c").alias("_contrib"))
         )
@@ -276,9 +166,7 @@ def _pagerank_run(
         cols = ["vid", new_rank.alias("rank"), "deg", "p"]
         if carry_prev:
             cols.append(F.col("rank").alias("_prev"))
-        return cur.join(F.broadcast(contribs) if use_bcast else contribs, "vid", "left").select(
-            *cols
-        )
+        return cur.join(contribs, "vid", "left").select(*cols)
 
     from pyspark.sql import Observation
 
@@ -328,6 +216,7 @@ def pagerank_csr(
     salt_threshold: int = 100_000,
     ledger: SuperstepLedger | None = None,
     shards=None,
+    resume_from: tuple[int, DataFrame] | None = None,
 ) -> DataFrame:
     """CSR-shard PageRank — the fast path (north star: "vectorized
     pandas/Arrow UDFs operating on CSR-packed partition blocks").
@@ -335,10 +224,15 @@ def pagerank_csr(
     The edge set stays distributed as salted dst-sharded int pairs
     (csr.materialize_csr_shards); the rank VECTOR lives on the driver
     as NumPy, exactly like the reference's dense parlay sequence
-    (parallel_pagerank.h:38-55).  One Spark job per superstep: a
-    mapInArrow gather with per-partition np.add.at, driver-side
-    combine + rank update + L1 check.  Same convergence contract and
-    same results (within float re-association) as :func:`pagerank`.
+    (parallel_pagerank.h:38-55).  Each superstep is one gather
+    (csr.gather_sum: a driver-local kernel for a single-task shard set,
+    else one mapInArrow job) plus driver-side combine + rank update +
+    L1 check.  Same convergence contract and same results (within
+    float re-association) as :func:`pagerank`.
+
+    ``resume_from``: (superstep, state) from SuperstepLedger.resume();
+    only its ``vid`` and ``rank`` columns are read, so a state written
+    by either path resumes, and the superstep count continues from it.
 
     Scale envelope: driver memory bounds the vertex vector (~10⁸
     vertices); use :func:`pagerank` beyond that.
@@ -358,49 +252,51 @@ def pagerank_csr(
         shards = materialize_csr_shards(
             edges, vertices=vertices, partitions=partitions, salt_threshold=salt_threshold
         )
-    n, deg = shards.n, shards.out_deg
-    if n == 0:
-        return spark.createDataFrame([], "vid long, rank double")
-    if source_vids:
-        p = np.zeros(n)
-        p[shards.index_of(np.array(sorted(source_vids), dtype=np.int64))] = 1.0 / len(source_vids)
-        r = p.copy()
-    else:
-        p = np.full(n, 1.0 / n)
-        r = np.full(n, 1.0 / n)
+    try:
+        n, deg = shards.n, shards.out_deg
+        if n == 0:
+            return spark.createDataFrame([], "vid long, rank double")
+        if source_vids:
+            p = np.zeros(n)
+            p[shards.index_of(np.array(sorted(source_vids), dtype=np.int64))] = 1.0 / len(source_vids)
+        else:
+            p = np.full(n, 1.0 / n)
+        if resume_from is None:
+            it, r = 0, p.copy()
+        else:
+            it, r = resume_from[0], shards.align(resume_from[1], "rank")
 
-    eps = approx_precision * n
-    cap = max_iterations if max_iterations is not None else 1_000_000
-    dangling_mask = deg == 0
-    safe_deg = np.where(dangling_mask, 1, deg)
+        eps = approx_precision * n
+        cap = max_iterations if max_iterations is not None else 1_000_000
+        dangling_mask = deg == 0
+        safe_deg = np.where(dangling_mask, 1, deg)
 
-    from graph_mining_spark.session import no_adaptive
+        from graph_mining_spark.session import no_adaptive
 
-    it = 0
-    # AQE adds a per-gather query-stage round-trip with nothing to
-    # adapt (the gather plan is a single map over cached descriptors)
-    with no_adaptive(spark):
-        while it < cap:
-            it += 1
-            contrib = gather_sum(shards, np.where(dangling_mask, 0.0, r / safe_deg))
-            dangling = float(r[dangling_mask].sum())
-            new = (1.0 - damping) * p + damping * (contrib + dangling * p)
-            l1 = float(np.abs(new - r).sum())
-            r = new
-            if ledger is not None:
-                # build the vertex-sized state DataFrame ONLY when this
-                # superstep durably checkpoints — a metrics-only record
-                # never touches it, and converting a multi-million-row
-                # vector to Arrow every iteration is measurable waste
-                state = _vec_df(spark, shards.vids, r) if ledger.will_checkpoint(it) else None
-                ledger.record(it, state, metric=l1, n_active=n, metrics_only=True)
-            if l1 < eps:
-                break
+        # AQE adds a per-gather query-stage round-trip with nothing to
+        # adapt (the gather plan is a single map over cached descriptors)
+        with no_adaptive(spark):
+            while it < cap:
+                it += 1
+                contrib = gather_sum(shards, np.where(dangling_mask, 0.0, r / safe_deg))
+                dangling = float(r[dangling_mask].sum())
+                new = (1.0 - damping) * p + damping * (contrib + dangling * p)
+                l1 = float(np.abs(new - r).sum())
+                r = new
+                if ledger is not None:
+                    # build the vertex-sized state DataFrame ONLY when this
+                    # superstep durably checkpoints — a metrics-only record
+                    # never touches it, and converting a multi-million-row
+                    # vector to Arrow every iteration is measurable waste
+                    state = _vec_df(spark, shards.vids, r) if ledger.will_checkpoint(it) else None
+                    ledger.record(it, state, metric=l1, n_active=n, metrics_only=True)
+                if l1 < eps:
+                    break
 
-    out = _vec_df(spark, shards.vids, r)
-    if own_shards:
-        shards.unpersist()
-    return out
+        return _vec_df(spark, shards.vids, r)
+    finally:
+        if own_shards:
+            shards.unpersist()
 
 
 def _vec_df(spark, vids, ranks):

@@ -17,16 +17,19 @@ from pyspark.sql import SparkSession
 @contextlib.contextmanager
 def no_adaptive(spark: SparkSession, shuffle_partitions: int | None = None):
     """Temporarily disable AQE for a superstep loop whose plan provably
-    contains no data-scale exchange (e.g. the broadcast-mode PageRank/CC
-    regime, where every table in play is vertex-sized and pre-partitioned).
+    contains no data-scale exchange: the CSR gather loops
+    (``pagerank_csr``, ``connected_components_csr``), which map over a
+    cached shard-descriptor table, and affinity's small-graph rounds,
+    where every table in play is vertex-sized.
 
     AQE materializes every query stage as its own job with a driver
     round-trip and re-planning in between; on an iterative loop of tiny
     per-superstep queries that overhead dominates (measured ~40 ms × ~14
-    stage-jobs per batch at sf0.1).  There is nothing for AQE to adapt in
-    this regime — no shuffle to coalesce, no skew to split — so this is a
-    size-gated toggle, not a local-mode tuning: the same loop above the
-    broadcast threshold keeps AQE on for its real shuffles.
+    stage-jobs per batch at sf0.1).  There is nothing for AQE to adapt
+    in these loops — no shuffle to coalesce, no skew to split — so this
+    is a size-gated toggle, not a local-mode tuning: the DataFrame
+    supersteps above the vertex gate keep AQE on for their real
+    shuffles.
 
     ``shuffle_partitions``: with AQE off, any residual exchange defaults
     to the session's static ``spark.sql.shuffle.partitions``; callers

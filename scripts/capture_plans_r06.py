@@ -65,14 +65,16 @@ def main() -> None:
 
         if which == "pagerank":
             mod = importlib.import_module("graph_mining_spark.operators.pagerank")
-            run = lambda: mod.pagerank(sym, check_every=2, max_iterations=4).agg(
-                F.sum("rank")
-            ).first()
+            # broadcast_threshold=0: this graph is below the vertex gate,
+            # and the CSR path below it runs no DataFrame superstep
+            run = lambda: mod.pagerank(
+                sym, check_every=2, max_iterations=4, broadcast_threshold=0
+            ).agg(F.sum("rank")).first()
         else:
             mod = importlib.import_module(
                 "graph_mining_spark.operators.connected_components"
             )
-            run = lambda: mod.connected_components(sym).count()
+            run = lambda: mod.connected_components(sym, broadcast_threshold=0).count()
         captured = []
         orig = ckpt_mod.cut_lineage
 

@@ -114,12 +114,49 @@ def test_forest_fallback_on_long_cycle(spark):
     assert got == {0: 0, 1: 0, 2: 0, 5: 0}
 
 
-def test_cc_broadcast_tail_matches_shuffle_path(spark):
+def test_cc_csr_matches_shuffle_path(spark):
     edges = seeded_er_edges(80, 0.04, seed=7)
     e = make_edges(spark, edges)
-    bcast = _labels(connected_components(e, broadcast_threshold=1 << 20))
+    csr = _labels(connected_components(e))  # below the vertex gate
     shuffle = _labels(connected_components(e, broadcast_threshold=0))
-    assert bcast == shuffle
+    assert csr == shuffle
+
+
+def test_cc_shuffle_path_frontier_broadcast_tail(spark):
+    # a threshold between the last non-empty frontier and n keeps the
+    # shuffle plan but broadcasts the frontier once it has shrunk
+    from graph_mining_spark.checkpoint import SuperstepLedger
+
+    edges = seeded_er_edges(80, 0.04, seed=7)
+    e = make_edges(spark, edges)
+    led = SuperstepLedger("cc")
+    want = _labels(connected_components(e, broadcast_threshold=0, ledger=led))
+    frontiers = [int(r["metric"]) for r in led.records]
+    tail = frontiers[-2]  # the last non-empty frontier
+    n = len(want)
+    assert 0 < tail < frontiers[0] < n  # early rounds shuffle, the tail broadcasts
+    led = SuperstepLedger("cc")
+    assert _labels(connected_components(e, broadcast_threshold=tail, ledger=led)) == want
+    assert led.records[-1]["partitions"] is not None  # DataFrame supersteps ran
+    assert want == bfs_components([u for u, v, w in edges] + [v for u, v, w in edges], edges)
+
+
+def test_vertices_subset_and_no_weight_column(spark):
+    # edges through an endpoint outside `vertices` are ignored, and an
+    # edge table without a weight column works on both paths
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 7), (7, 3), (4, 5)], "src long, dst long")
+    verts = spark.createDataFrame([(v,) for v in (0, 1, 2, 3, 4, 5, 6)], "vid long")
+    want = {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6}
+    for thr in (131_072, 0):
+        assert _labels(connected_components(e, vertices=verts, broadcast_threshold=thr)) == want
+    assert _labels(connected_components(e)) == {0: 0, 1: 0, 2: 0, 3: 0, 7: 0, 4: 4, 5: 4}
+
+
+def test_empty_edges(spark):
+    e = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(e).count() == 0
+    verts = spark.createDataFrame([(3,), (5,)], "vid long")
+    assert _labels(connected_components(e, vertices=verts)) == {3: 3, 5: 5}
 
 
 def test_forest_dangling_pointer_target_not_dropped(spark):

@@ -14,41 +14,77 @@ def _ranks(df):
     return {r["vid"]: r["rank"] for r in df.collect()}
 
 
+def _labels(df):
+    return {r["vid"]: r["label"] for r in df.collect()}
+
+
 def test_pagerank_resume_matches_uninterrupted(spark, tmp_path):
     und = seeded_er_edges(40, 0.08, seed=13)
     directed = und + [(v, u, w) for u, v, w in und]
     e = make_edges(spark, directed)
 
     full = _ranks(pagerank(e))
+    want = np.array([full[k] for k in sorted(full)])
 
-    # run 1: stop early at 4 iterations, checkpoint every step
-    led_dir = str(tmp_path / "pr")
-    led = SuperstepLedger("pagerank", directory=led_dir, every=1)
-    pagerank(e, max_iterations=4, ledger=led)
-    assert os.path.exists(os.path.join(led_dir, "ledger.jsonl"))
+    # default (CSR below the vertex gate) and the shuffle DataFrame path
+    for thr in (131_072, 0):
+        # run 1: stop early at 4 iterations, checkpoint every step
+        led_dir = str(tmp_path / f"pr{thr}")
+        led = SuperstepLedger("pagerank", directory=led_dir, every=1)
+        pagerank(e, max_iterations=4, ledger=led, broadcast_threshold=thr)
+        assert os.path.exists(os.path.join(led_dir, "ledger.jsonl"))
 
-    # run 2: resume from the durable state and converge
-    resumed_state = SuperstepLedger.resume(spark, "pagerank", led_dir)
-    assert resumed_state is not None and resumed_state[0] == 4
-    got = _ranks(pagerank(e, resume_from=resumed_state))
+        # run 2: resume from the durable state and converge
+        resumed_state = SuperstepLedger.resume(spark, "pagerank", led_dir)
+        assert resumed_state is not None and resumed_state[0] == 4
+        got = _ranks(pagerank(e, resume_from=resumed_state, broadcast_threshold=thr))
+        assert np.allclose(want, np.array([got[k] for k in sorted(got)]), atol=1e-9)
 
-    a = np.array([full[k] for k in sorted(full)])
-    b = np.array([got[k] for k in sorted(got)])
-    assert np.allclose(a, b, atol=1e-9)
+    # a state either path wrote resumes on the other path
+    for wrote, thr in ((0, 131_072), (131_072, 0)):
+        resumed_state = SuperstepLedger.resume(spark, "pagerank", str(tmp_path / f"pr{wrote}"))
+        got = _ranks(pagerank(e, resume_from=resumed_state, broadcast_threshold=thr))
+        assert np.allclose(want, np.array([got[k] for k in sorted(got)]), atol=1e-9)
 
 
 def test_cc_resume(spark, tmp_path):
-    e = make_edges(spark, [(i, i + 1, 1.0) for i in range(30)])
-    led_dir = str(tmp_path / "cc")
-    led = SuperstepLedger("cc", directory=led_dir, every=1)
-    connected_components(e, max_supersteps=2, ledger=led)
-    resumed = SuperstepLedger.resume(spark, "cc", led_dir)
-    assert resumed is not None
-    labs = {
-        r["vid"]: r["label"]
-        for r in connected_components(e, resume_from=(resumed[0], resumed[1])).collect()
-    }
-    assert set(labs.values()) == {0}
+    # a path through shuffled ids takes several supersteps on either path
+    perm = np.random.default_rng(3).permutation(31).tolist()
+    e = make_edges(spark, [(perm[i], perm[i + 1], 1.0) for i in range(30)])
+    for thr in (131_072, 0):
+        full_led = SuperstepLedger("cc")
+        full = _labels(connected_components(e, ledger=full_led, broadcast_threshold=thr))
+        assert set(full.values()) == {0} and len(full_led.records) > 3
+        led_dir = str(tmp_path / f"cc{thr}")
+        led = SuperstepLedger("cc", directory=led_dir, every=1)
+        connected_components(e, max_supersteps=2, ledger=led, broadcast_threshold=thr)
+        resumed = SuperstepLedger.resume(spark, "cc", led_dir)
+        assert resumed is not None and resumed[0] == 2
+        assert _labels(connected_components(e, resume_from=resumed, broadcast_threshold=thr)) == full
+
+
+def test_resume_ignores_torn_final_line(spark, tmp_path):
+    import pytest
+
+    led_dir = str(tmp_path / "torn")
+    led = SuperstepLedger("csr", directory=led_dir, every=1)
+    df = spark.range(3).selectExpr("id as vid", "cast(id as double) as rank")
+    for step in (1, 2):
+        led.record(step, df, metric=0.1, n_active=3, metrics_only=True)
+    path = os.path.join(led_dir, "ledger.jsonl")
+    good = open(path).read()
+    half = good.splitlines()[-1].replace('"superstep": 2', '"superstep": 3')[:40]
+    with open(path, "a") as f:
+        f.write(half)  # a driver killed mid-append
+    resumed = SuperstepLedger.resume(spark, "csr", led_dir)
+    assert resumed is not None and resumed[0] == 2
+    assert resumed[1].count() == 3
+    assert open(path).read() == good  # the torn tail is cut off
+    # a corrupt line that is not the last still raises
+    with open(path, "w") as f:
+        f.write(half + "\n" + good)
+    with pytest.raises(json.JSONDecodeError):
+        SuperstepLedger.resume(spark, "csr", led_dir)
 
 
 def test_ledger_records_metrics(spark, tmp_path):

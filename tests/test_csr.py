@@ -41,9 +41,14 @@ def test_pagerank_csr_vs_oracle_and_dataframe(spark):
     g = np.array([got[k] for k in sorted(got)])
     w = np.array([want[k] for k in sorted(want)])
     assert np.allclose(g, w, atol=1e-6)
-    df_mode = {r["vid"]: r["rank"] for r in pagerank(e, vertices=verts).collect()}
-    d = np.array([df_mode[k] for k in sorted(df_mode)])
-    assert np.allclose(g, d, atol=1e-6)
+    # default (CSR below the vertex gate) and the shuffle DataFrame path
+    for thr in (131_072, 0):
+        df_mode = {
+            r["vid"]: r["rank"]
+            for r in pagerank(e, vertices=verts, broadcast_threshold=thr).collect()
+        }
+        d = np.array([df_mode[k] for k in sorted(df_mode)])
+        assert np.allclose(g, d, atol=1e-6)
 
 
 def test_pagerank_csr_dangling_and_personalized(spark):
@@ -74,8 +79,11 @@ def test_cc_csr_matches_dataframe_and_oracle(spark):
     got = {r["vid"]: r["label"] for r in connected_components_csr(e, partitions=4).collect()}
     want = bfs_components([u for u, v, w in edges] + [v for u, v, w in edges], edges)
     assert got == want
-    df_mode = {r["vid"]: r["label"] for r in connected_components(e).collect()}
-    assert got == df_mode
+    for thr in (131_072, 0):
+        df_mode = {
+            r["vid"]: r["label"] for r in connected_components(e, broadcast_threshold=thr).collect()
+        }
+        assert got == df_mode
 
 
 def test_cc_csr_long_path(spark):

@@ -85,26 +85,46 @@ def test_check_every_batching_matches(spark):
     _assert_close(b, a, atol=1e-12)
 
 
-def _assert_broadcast_and_shuffle_agree(spark, edges, check_every, iters):
+def _assert_csr_and_shuffle_agree(spark, edges, check_every, iters):
     e = make_edges(spark, edges)
     kw = dict(max_iterations=iters, check_every=check_every)
-    b = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=1 << 20, **kw).collect()}
-    s = {r["vid"]: r["rank"] for r in pagerank(e, broadcast_threshold=0, **kw).collect()}
-    assert b.keys() == s.keys()
-    assert all(abs(b[k] - s[k]) < 1e-12 for k in b)
+    c = _ranks(pagerank(e, **kw))  # below the vertex gate: the CSR path
+    s = _ranks(pagerank(e, broadcast_threshold=0, **kw))
+    assert c.keys() == s.keys()
+    assert all(abs(c[k] - s[k]) < 1e-12 for k in c)
 
 
-def test_broadcast_and_shuffle_plans_agree(spark):
-    # the vertex-count-gated broadcast fast path must match the
-    # unbounded shuffle-join plan to float re-association tolerance
-    _assert_broadcast_and_shuffle_agree(spark, seeded_er_edges(120, 0.05, seed=21), 1, 8)
+def test_csr_and_shuffle_plans_agree(spark):
+    # the CSR path the vertex gate selects must match the unbounded
+    # shuffle-join plan to float re-association tolerance
+    _assert_csr_and_shuffle_agree(spark, seeded_er_edges(120, 0.05, seed=21), 1, 8)
 
 
-def test_broadcast_and_shuffle_plans_agree_batched_and_dangling(spark):
+def test_csr_and_shuffle_plans_agree_batched_and_dangling(spark):
     # the same agreement with batched checks on a graph with no
     # dangling vertex, and per-step checks on a graph with one (998)
     und = seeded_er_edges(60, 0.08, seed=31)
     sym = und + [(v, u, w) for u, v, w in und]
     dangling = und + [(997, 998, 1.0)]
     for edges, check_every in [(sym, 3), (dangling, 1)]:
-        _assert_broadcast_and_shuffle_agree(spark, edges, check_every, 7)
+        _assert_csr_and_shuffle_agree(spark, edges, check_every, 7)
+
+
+def test_default_matches_pagerank_csr_bitwise(spark):
+    from graph_mining_spark.operators.pagerank import pagerank_csr
+
+    und = seeded_er_edges(80, 0.06, seed=41)
+    e = make_edges(spark, und + [(v, u, w) for u, v, w in und] + [(500, 501, 1.0)])
+    for kw in ({}, {"source_vids": [0, 3]}):
+        assert _ranks(pagerank(e, **kw)) == _ranks(pagerank_csr(e, **kw))
+
+
+def test_vertices_must_hold_every_endpoint(spark):
+    # below the gate the CSR build rejects an edge endpoint outside
+    # `vertices`; isolated vertices in `vertices` are fine
+    e = make_edges(spark, [(0, 1, 1.0), (1, 2, 1.0)])
+    verts = spark.createDataFrame([(0,), (1,), (2,), (9,)], "vid long")
+    got = _ranks(pagerank(e, vertices=verts))
+    assert set(got) == {0, 1, 2, 9} and abs(sum(got.values()) - 1.0) < 1e-9
+    with pytest.raises(ValueError, match="not in `vertices`"):
+        pagerank(e, vertices=verts.filter("vid != 2"))

@@ -21,10 +21,14 @@ def _g7(n=2000, seed=23):
 def test_g7_cc_matches_oracle(spark):
     edges = _g7()
     e = make_edges(spark, edges)
-    got = {r["vid"]: r["label"] for r in connected_components(e).collect()}
     vids = {u for u, *_ in edges} | {v for _, v, _ in edges}
-    assert got == bfs_components(vids, edges)
-    assert set(got.values()) == {0}  # hub connects everything
+    # default (CSR below the vertex gate) and the hub on the shuffle plan
+    for thr in (131_072, 0):
+        got = {
+            r["vid"]: r["label"] for r in connected_components(e, broadcast_threshold=thr).collect()
+        }
+        assert got == bfs_components(vids, edges)
+        assert set(got.values()) == {0}  # hub connects everything
 
 
 def test_g7_salted_gather_identical(spark):
